@@ -557,6 +557,12 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("cupertino_nvr_spark-bench")
+    # timings taken on different core counts are not comparable, so every
+    # record states the parallelism it ran with
+    parallelism = {
+        "cores": spark.sparkContext.defaultParallelism,
+        "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+    }
 
     # warm the JVM, parquet footer caches, and the Python UDF workers
     # (daemon fork + pandas/pyarrow import) outside the timed region.
@@ -761,6 +767,7 @@ def main() -> None:
         "extras": extras,
         "reprobe": reprobe,
         "sf": float(sf),
+        **parallelism,
     }
     if suspect:
         # sweep AND fresh-session reprobe both >2x the prior round's
@@ -811,6 +818,7 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "sf": float(sf),
+        **parallelism,
         "queries": timings,
         "top_cost": dict(
             sorted(

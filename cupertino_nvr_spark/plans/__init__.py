@@ -25,71 +25,47 @@ from cupertino_nvr_spark.plans import llm  # noqa: F401,E402
 from cupertino_nvr_spark.plans import relational  # noqa: F401,E402
 from cupertino_nvr_spark.plans import tpch_extra  # noqa: F401,E402
 
-# r15 sampled-window priority — GENERATED, not hand-typed (r13 VERDICT
-# item 2): `python tools/gen_window.py` derives it from the committed
-# CORRECTNESS_r* history (via `git show HEAD:` — a driver artifact
-# landing in the working tree mid-round cannot change it) plus the
-# per-round debut/changed-definition pins in plans/rotation.py, and
-# tests/test_registry_order.py asserts this literal equals the
-# generator's output, so a hand-edit that drifts from the policy is a
-# red test. Policy (plans/rotation.py::generate_window_priority):
+# r16 sampled-window priority — GENERATED, not hand-typed (r13 VERDICT
+# item 2): `python tools/gen_window.py` derives it from the CORRECTNESS_r*
+# history committed at plans/rotation.py::HISTORY_REF (via `git show` —
+# a round artifact landing in the working tree or committed at HEAD
+# cannot change it) plus the per-round debut/changed-definition pins in
+# plans/rotation.py, and tests/test_registry_order.py asserts this
+# literal equals the generator's output, so a hand-edit that drifts from
+# the policy is a red test. Policy
+# (plans/rotation.py::generate_window_priority):
 #   1  flagship (always in-window, green every round)
 #   2  debuts + never-driver-green queries (debut-in-window policy) —
-#      r14: docs_simhash_neardup_uncapped, the streaming-parity ANCHOR
-#      (r13 VERDICT item 3): the exact batch form the simhash stream
-#      twin is pinned equal to, now externally hash-confirmed
-#   3  changed-definition rows (r13 policy) — r14:
-#      docs_classifier_calibration (bins now computed on the fixed-point
-#      kp6 integer, r13 ADVICE item 3)
+#      r16: none
+#   3  changed-definition rows (r13 policy) — r16: none
 #   4  staleness fill, stalest last-green round first, alphabetical
-#      within a class — r14: the 25 remaining r9-stale rows, then the
-#      first 22 of the 49 r10-stale rows; the other 27 r10 rows directly
-#      follow the window (first in line for r15).
+#      within a class — r16: the 25 r11-stale rows, then the first 24 of
+#      the 48 r12-stale rows; the other 24 r12 rows directly follow the
+#      window (first in line for r17).
 # The literal covers EVERY declared query, so overflow (entries 51+)
 # follows in priority order — nothing is ever stranded at its raw
 # registration-order position (the r12 review finding).
-_WINDOW_PRIORITY = [  # r15 snapshot
-    'asof_ttl_overlay', 'docs_tokenizer_fertility', 'docs_train_shards',
-    'docs_unigram_lm_score', 'docs_vocab_topk',
-    'docs_wordpiece_tokenized_len', 'docs_zipf_slope',
-    'dominant_promo_suppliers', 'embedding_cosine_neardup',
-    'embedding_dim_stats', 'embedding_int8_ann', 'embedding_int8_ivf_ann',
-    'embedding_ivf_ann', 'embedding_kmeans', 'embedding_lsh_ann',
-    'embedding_lsh_ann_multiprobe', 'events_cusum_changepoints',
-    'events_cusum_segments', 'important_parts',
-    'media_doc_dedup_survivors', 'media_phash_tau_profile',
-    'min_cost_supplier', 'nation_yearly_growth', 'orders_part_pairs',
-    'parts_copurchase_pagerank', 'product_profit',
-    'supplier_concentration_hhi', 'supplier_part_variety',
-    'command_target_filter', 'command_validation',
-    'conditional_bucketing', 'confidence_array_filter',
-    'customers_fuzzy_match', 'daily_revenue_gapfill',
-    'datetime_functions', 'detection_projection',
-    'docs_curation_inc_report', 'docs_exact_dedup',
-    'docs_fingerprint_dedup', 'docs_minhash_lsh_candidates',
-    'docs_ngram_jaccard_pairs', 'docs_quality_lang', 'docs_readability',
-    'docs_simhash', 'docs_simhash_neardup', 'docs_source_quality_report',
-    'docs_token_stats', 'embedding_cosine_topk', 'embedding_ivf_pq_ann',
-    'embedding_ivf_probe_profile', 'embedding_pq_ann',
-    'embedding_pq_quant', 'embedding_prefix_rerank_ann',
-    'embedding_semdedup', 'event_type_user_overlap',
-    'event_value_median_udaf', 'events_activity_streaks',
-    'events_anomaly_zscore', 'events_cdc_apply',
-    'events_conversion_latency', 'events_funnel', 'events_heavy_hitters',
-    'events_hourly_profile', 'events_last_touch_attribution',
-    'events_markov_transitions', 'events_path_signatures',
-    'events_retention_cohorts', 'events_rfm_segments',
-    'events_sliding_throughput', 'events_state_intervals',
-    'events_stratified_sample', 'media_exact_dedup', 'media_features',
-    'media_frame_plan', 'media_patch_plan', 'docs_bpe_compression',
-    'docs_bpe_pair_stats', 'docs_bpe_tokenized_len',
-    'docs_bpe_train_merges', 'docs_c4_filters', 'docs_char_ngram_langid',
-    'docs_chunked_udtf', 'docs_classifier_score',
-    'docs_dedup_rate_by_lang', 'docs_filter_attribution',
-    'docs_gopher_quality', 'docs_hybrid_rrf_search',
-    'docs_kneser_ney_score', 'docs_langid_confusion',
-    'docs_lsh_quality_eval', 'docs_neardup_method_agreement',
-    'docs_oov_rate', 'docs_packing_efficiency', 'docs_pmi_collocations',
+_WINDOW_PRIORITY = [  # r16 snapshot
+    'asof_ttl_overlay', 'embedding_pq_ann', 'embedding_pq_quant',
+    'embedding_prefix_rerank_ann', 'embedding_semdedup',
+    'event_type_user_overlap', 'event_value_median_udaf',
+    'events_activity_streaks', 'events_anomaly_zscore',
+    'events_cdc_apply', 'events_conversion_latency', 'events_funnel',
+    'events_heavy_hitters', 'events_hourly_profile',
+    'events_last_touch_attribution', 'events_markov_transitions',
+    'events_path_signatures', 'events_retention_cohorts',
+    'events_rfm_segments', 'events_sliding_throughput',
+    'events_state_intervals', 'events_stratified_sample',
+    'media_exact_dedup', 'media_features', 'media_frame_plan',
+    'media_patch_plan', 'docs_bpe_compression', 'docs_bpe_pair_stats',
+    'docs_bpe_tokenized_len', 'docs_bpe_train_merges', 'docs_c4_filters',
+    'docs_char_ngram_langid', 'docs_chunked_udtf',
+    'docs_classifier_score', 'docs_dedup_rate_by_lang',
+    'docs_filter_attribution', 'docs_gopher_quality',
+    'docs_hybrid_rrf_search', 'docs_kneser_ney_score',
+    'docs_langid_confusion', 'docs_lsh_quality_eval',
+    'docs_neardup_method_agreement', 'docs_oov_rate',
+    'docs_packing_efficiency', 'docs_pmi_collocations',
     'docs_retrieval_rbo', 'docs_sequence_packing',
     'docs_softdedup_weights', 'docs_substring_dup_spans',
     'docs_token_budget_sample', 'docs_token_entropy',
@@ -142,7 +118,29 @@ _WINDOW_PRIORITY = [  # r15 snapshot
     'revenue_by_nation', 'shipping_priority', 'small_quantity_revenue',
     'top20_lineitems', 'top_orders_per_customer', 'top_supplier_revenue',
     'trailing_user_activity', 'user_event_pivot', 'user_event_unpivot',
-    'user_running_value', 'user_value_exact_stats', 'waiting_suppliers'
+    'user_running_value', 'user_value_exact_stats', 'waiting_suppliers',
+    'command_target_filter', 'command_validation',
+    'conditional_bucketing', 'confidence_array_filter',
+    'customers_fuzzy_match', 'daily_revenue_gapfill',
+    'datetime_functions', 'detection_projection',
+    'docs_curation_inc_report', 'docs_exact_dedup',
+    'docs_fingerprint_dedup', 'docs_minhash_lsh_candidates',
+    'docs_ngram_jaccard_pairs', 'docs_quality_lang', 'docs_readability',
+    'docs_simhash', 'docs_simhash_neardup', 'docs_source_quality_report',
+    'docs_token_stats', 'docs_tokenizer_fertility', 'docs_train_shards',
+    'docs_unigram_lm_score', 'docs_vocab_topk',
+    'docs_wordpiece_tokenized_len', 'docs_zipf_slope',
+    'dominant_promo_suppliers', 'embedding_cosine_neardup',
+    'embedding_cosine_topk', 'embedding_dim_stats', 'embedding_int8_ann',
+    'embedding_int8_ivf_ann', 'embedding_ivf_ann', 'embedding_ivf_pq_ann',
+    'embedding_ivf_probe_profile', 'embedding_kmeans',
+    'embedding_lsh_ann', 'embedding_lsh_ann_multiprobe',
+    'events_cusum_changepoints', 'events_cusum_segments',
+    'important_parts', 'media_doc_dedup_survivors',
+    'media_phash_tau_profile', 'min_cost_supplier',
+    'nation_yearly_growth', 'orders_part_pairs',
+    'parts_copurchase_pagerank', 'product_profit',
+    'supplier_concentration_hhi', 'supplier_part_variety'
 ]
 
 _registry.WINDOW_PRIORITY[:] = _WINDOW_PRIORITY

@@ -11,10 +11,11 @@ names per round was the residual risk. This module makes the priority
 list a FUNCTION of:
 
 - the committed driver history (``CORRECTNESS_r*.json`` read via
-  ``git show HEAD:`` — never the working tree, so the driver landing the
-  NEXT round's artifact mid-round cannot change what the rotation was
-  derived from; the r11 close demonstrated the working-tree variant
-  reddens exactly then),
+  ``git show HISTORY_REF:`` — neither the working tree nor ``HEAD``, so
+  committing the NEXT round's artifact cannot change what the rotation
+  was derived from; the r11 close showed the working-tree
+  variant reddens when the artifact lands, and the r15 close showed the
+  ``HEAD`` variant reddens when it is committed),
 - this round's debuts (new queries ship inside the sampled window the
   round they are introduced — history cannot know them), and
 - this round's changed-definition rows (r13 policy: a query whose
@@ -41,7 +42,14 @@ from pathlib import Path
 
 # --- per-round rotation inputs (the only hand-maintained part) ---------
 
-CURRENT_ROUND = 15
+CURRENT_ROUND = 16
+
+# The commit whose CORRECTNESS_r*.json files this round's rotation is
+# derived from: the close of the previous round. Rotating to a new round
+# moves CURRENT_ROUND and HISTORY_REF together; until then, later
+# commits (round artifacts included) leave the window,
+# the literal in plans/__init__.py and the pin suite unchanged.
+HISTORY_REF = "58bf7fca52667e708b1c137ccbeed1c7f78d54cb"  # r15 close
 
 # Queries debuting this round (no committed green history by
 # construction). The generator also treats any never-green declared
@@ -51,7 +59,7 @@ CURRENT_ROUND = 15
 # module only — CURRENT_ROUND above records which round the pins are
 # for (a round-stamped name would force coordinated renames in three
 # files every round, re-creating the churn this module removes).
-DEBUTS: frozenset[str] = frozenset()  # r15 is an optimization round: no new queries
+DEBUTS: frozenset[str] = frozenset()  # r16 adds no queries
 
 # Round in which each query's DECLARED definition (result set, schema,
 # or the physical cost contract its recorded floor was measured under)
@@ -91,11 +99,11 @@ _REPO = Path(__file__).resolve().parent.parent.parent
 
 
 def committed_correctness_files(repo: Path = _REPO) -> list[str]:
-    """CORRECTNESS_r*.json names as committed at HEAD (git ls-tree), so a
-    driver artifact landing in the working tree mid-round cannot change
-    what the rotation derives from."""
+    """CORRECTNESS_r*.json names as committed at HISTORY_REF (git
+    ls-tree), so a round artifact landing in the working tree or at HEAD
+    cannot change what the rotation derives from."""
     names = subprocess.run(
-        ["git", "-C", str(repo), "ls-tree", "--name-only", "HEAD"],
+        ["git", "-C", str(repo), "ls-tree", "--name-only", HISTORY_REF],
         capture_output=True,
         text=True,
         check=True,
@@ -115,7 +123,7 @@ def committed_green_history(repo: Path = _REPO) -> dict[str, int]:
     for name in committed_correctness_files(repo):
         rnd = int(re.search(r"_r(\d+)", name).group(1))
         blob = subprocess.run(
-            ["git", "-C", str(repo), "show", f"HEAD:{name}"],
+            ["git", "-C", str(repo), "show", f"{HISTORY_REF}:{name}"],
             capture_output=True,
             text=True,
             check=True,
@@ -178,7 +186,7 @@ def generate_window_priority(
 
 
 def current_window_priority(repo: Path = _REPO) -> list[str]:
-    """Generator output on the committed history and the live registry —
+    """Generator output on the pinned history and the live registry —
     what ``tools/gen_window.py`` prints and the pin test compares against
     the literal in ``plans/__init__.py``."""
     from cupertino_nvr_spark.plans import all_queries

@@ -21,10 +21,10 @@ bug and a hand-edit are both red:
   so overflow directly follows the window (nothing stranded).
 
 Last-green rounds are recomputed from the CORRECTNESS_r*.json files AS
-COMMITTED AT HEAD (`git show`), not the working tree: the r11 round
-close showed the working-tree variant fails the moment the driver lands
-the NEXT round's artifact mid-handoff, which is rotation bookkeeping,
-not a product signal.
+COMMITTED AT plans/rotation.py::HISTORY_REF (`git show`), neither the
+working tree nor HEAD: the r11 and r15 round closes showed those
+variants fail the moment the NEXT round's artifact lands or is
+committed, which is rotation bookkeeping, not a product signal.
 """
 
 from __future__ import annotations

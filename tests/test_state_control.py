@@ -16,17 +16,9 @@ from cupertino_nvr_spark.streaming.control import ControlPlane, EngineConfig, ta
 from cupertino_nvr_spark.streaming.sinks import AtMostOnceSink, RetainedLatestStore
 from cupertino_nvr_spark.streaming.state import ttl_latest_per_key
 
-from tests.test_streaming import make_events, ts, write_batches
+from tests.test_streaming import make_events, stop_after_rows, ts, write_batches
 
 pytestmark = pytest.mark.slow  # rehearsal suite: excluded from the default (gate) run, see pytest.ini
-
-
-@pytest.fixture(autouse=True, scope="module")
-def few_shuffle_partitions(spark):
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    yield
-    spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 # ---------------------------------------------------------------------------
@@ -59,7 +51,7 @@ def test_ttl_latest_per_key_updates(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    stop_after_rows(q, 5)
     rows = spark.table(name).collect()
     # per key, the LAST emitted row is the cache's final value
     final = {}

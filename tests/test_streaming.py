@@ -83,6 +83,18 @@ def run_stream(df, tmpdir, output_mode="append"):
     return df.sparkSession.table(name)
 
 
+def stop_after_rows(q, n_rows, timeout=120):
+    """Stop ``q`` once its micro-batches have consumed ``n_rows`` input rows.
+    A processing-time state timeout keeps an availableNow query scheduling
+    no-data batches, so such a query never terminates on its own."""
+    deadline = time.time() + timeout
+    while q.isActive and time.time() < deadline:
+        if sum(p["numInputRows"] for p in q.recentProgress) >= n_rows:
+            break
+        time.sleep(0.2)
+    q.stop()
+
+
 def write_batches(df_batches, path, start=0):
     """One parquet file per micro-batch (maxFilesPerTrigger=1 replay).
     NOTE: a stream globbing ``{path}/*`` lists files exactly one directory
@@ -94,16 +106,6 @@ def write_batches(df_batches, path, start=0):
 @pytest.fixture()
 def stream_dir(tmp_path):
     return str(tmp_path)
-
-
-@pytest.fixture(autouse=True, scope="module")
-def few_shuffle_partitions(spark):
-    """Stateful streaming spins one state store per shuffle partition per
-    micro-batch; 32 of them dominate wall time on row-count-3 batches."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    yield
-    spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 # ---------------------------------------------------------------------------

@@ -4,7 +4,10 @@ plus this round's debut/changed-definition pins (plans/rotation.py), so
 the per-round literal is a SNAPSHOT of the policy, never hand-typed
 (r13 VERDICT item 2; the r12 stranded-row finding is the failure mode
 this removes). ``tests/test_registry_order.py`` asserts generator ==
-literal, so regenerating after any registry/pin change is mandatory:
+literal, so regenerating after any registry/pin change is mandatory.
+Rotating to a new round: set ``CURRENT_ROUND`` and ``HISTORY_REF`` (the
+commit that closed the previous round) in plans/rotation.py, update its
+debut/changed-definition pins, then paste the printed literal:
 
     python tools/gen_window.py        # prints the literal + a summary
 """
